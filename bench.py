@@ -3,8 +3,9 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
 Primary metric (BASELINE.json): turns/sec through the full extraction batch
 job — read transcript parquet -> hash(conv_id) bucketing with turn-block
-salting -> fused HTML-strip+segmentation pandas UDF -> stable
-(conv_id, turn_idx) sort within partitions -> parquet write. The input table
+salting -> stable (conv_id, turn_idx) sort within partitions -> the
+mapInArrow extraction lane (fused HTML-strip+segmentation) -> parquet
+write. The input table
 is generated deterministically ONCE on disk (untimed), per the BASELINE
 bench protocol; a warm-up run is excluded.
 
@@ -31,9 +32,9 @@ SCRATCH = os.environ.get("TEXOO_BENCH_SCRATCH",
 
 BUCKETS = int(os.environ.get("TEXOO_BENCH_BUCKETS", "64"))
 
-# written output: tok_text is intentionally dropped — it is always
-# extracted_text[tok_begin:tok_end] (offset-faithful reconstruction), so
-# storing it would double the output bytes for zero information
+# written output: token surfaces are not stored — pipeline.with_tok_text
+# derives them from extracted_text and the offsets (rule in schema.py), so
+# storing them would double the output bytes for zero information
 OUT_COLUMNS = ["conv_id", "turn_idx", "role", "tool", "ts",
                "extracted_text", "n_sentences", "n_tokens",
                "tok_begin", "tok_end",

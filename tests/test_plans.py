@@ -49,12 +49,16 @@ def test_knn_is_take_ordered(spark):
 
 
 def test_extraction_is_single_python_hop(spark):
+    """Extraction crosses into Python exactly once: one MapInArrow node
+    (fused strip + extract), no other Python node, no stored surfaces."""
     from texoo_spark.pipeline import extract_turns
     df = spark.createDataFrame(
         [("c", 0, "user", "text here", None)],
         "conv_id string, turn_idx int, role string, text string, tool string")
     plan = plan_of(extract_turns(df))
-    assert plan.count("ArrowEvalPython") == 1  # fused strip+extract
+    assert plan.count("MapInArrow") == 1
+    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert "tok_text" not in plan
 
 
 def test_extract_tokens_prunes_documents_scan(spark):
@@ -98,14 +102,17 @@ def test_bm25_broadcasts_query_side(spark):
     assert plan.count("HashAggregate") >= 2  # partial aggs survive
 
 
-def test_lean_extraction_single_python_hop(spark):
-    from texoo_spark.pipeline import extract_turns
+def test_tok_text_surfaces_add_no_python_hop(spark):
+    """with_tok_text derives token surfaces in Catalyst: the plan keeps
+    the one MapInArrow node and gains no Python evaluation."""
+    from texoo_spark.pipeline import extract_turns, with_tok_text
     df = spark.createDataFrame(
         [("c", 0, "user", "text here", None)],
         "conv_id string, turn_idx int, role string, text string, tool string")
-    plan = plan_of(extract_turns(df, lean=True))
-    assert plan.count("ArrowEvalPython") == 1
-    assert "tok_text" not in plan  # lean schema never materializes surfaces
+    plan = plan_of(with_tok_text(extract_turns(df)))
+    assert plan.count("MapInArrow") == 1
+    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert "tok_text" in plan
 
 
 def test_segmentation_metrics_partition_on_doc_not_single(spark):

@@ -7,6 +7,9 @@ metric bounds, dedup determinism. Seeded and deadline-free for CI stability.
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from texoo_spark import textops
@@ -67,6 +70,50 @@ def test_offsets_are_sane(text, mode):
     base = begins[0] if begins else 0
     for t, b, e in zip(toks, begins, ends):
         assert extracted[b - base:e - base] == t
+
+
+# characters on which the JVM substring and the Python tokenizer could
+# disagree about positions: non-space whitespace, CRLF, NBSP, zero-width,
+# astral (two UTF-16 units, one code point)
+_ADVERSARIAL = ["\t", "\n", "\r\n", "\xa0", "\u200b", "\U0001F600"]
+
+
+def _adversarial_turns(n_random: int, seed: int = 0) -> list:
+    turns = [None, "", " ", "\n\n", "  lead spaces here."]
+    for c in _ADVERSARIAL:
+        turns += [c + "lead here.", c + c + " lead. Two.",
+                  "trailing here." + c, "inter" + c + "ior. Next" + c + c
+                  + "one " + c + " x."]
+    rng = random.Random(seed)
+    pieces = _ADVERSARIAL + [" ", "  ", "ab", "Cd", ".", "?", "x1"]
+    turns += ["".join(rng.choice(pieces) for _ in range(rng.randint(0, 40)))
+              for _ in range(n_random)]
+    return turns
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("mode", [textops.KEEP, textops.DISCARD])
+def test_with_tok_text_equals_reference_surfaces(mode):
+    """The reconstruction rule stated in schema.py, end to end: token
+    surfaces derived by pipeline.with_tok_text from the extraction lane's
+    offsets equal textops.extract_arrays' tok_texts on adversarial turns
+    (leading, trailing and interior non-space whitespace, CRLF, NBSP,
+    zero-width, astral, empty and None)."""
+    from texoo_spark.pipeline import extract_turns, with_tok_text
+    from texoo_spark.session import get_spark
+    spark = get_spark("texoo-property", master="local[2]",
+                      shuffle_partitions=2)
+    turns = _adversarial_turns(2000)
+    df = spark.createDataFrame(list(enumerate(turns)),
+                               "turn_idx int, text string")
+    rows = (with_tok_text(extract_turns(df, newlines=mode,
+                                        strip_html_first=False))
+            .select("turn_idx", "tok_text").collect())
+    assert len(rows) == len(turns)
+    for r in rows:
+        text = turns[r.turn_idx]
+        assert r.tok_text == textops.extract_arrays(text or "", mode)[0], \
+            repr(text)
 
 
 @SETTINGS

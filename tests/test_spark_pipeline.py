@@ -43,29 +43,49 @@ def fixture_turns(spark):
               "tool string")
 
 
+def _reference(text):
+    """The pure reference lane: html.strip_html (HTML-looking turns only),
+    then textops.extract_arrays in DISCARD mode."""
+    from texoo_spark.html import looks_like_html, strip_html
+    t = text or ""
+    if looks_like_html(t):
+        t = strip_html(t)["main_text"]
+    return textops.extract_arrays(t, textops.DISCARD)
+
+
+def _texts(df):
+    return {(r.conv_id, r.turn_idx): r.text for r in df.collect()}
+
+
 def test_per_turn_text_equality(spark, fixture_turns):
     """THE correctness contract: extracted_text from the Spark pipeline
     equals the pure-Python reference reconstruction for every turn."""
-    from texoo_spark.pipeline import extract_turns
-    out = extract_turns(fixture_turns, newlines=textops.DISCARD,
-                        strip_html_first=False).collect()
+    from texoo_spark.pipeline import extract_turns, with_tok_text
+    texts = _texts(fixture_turns)
+    out = with_tok_text(extract_turns(fixture_turns,
+                                      newlines=textops.DISCARD,
+                                      strip_html_first=False)).collect()
     assert len(out) == 7
     for row in out:
-        expected = textops.extract_document(row.text, textops.DISCARD)
-        assert row.extracted_text == expected.text, row.text[:40]
+        text = texts[(row.conv_id, row.turn_idx)]
+        expected = textops.extract_document(text, textops.DISCARD)
+        assert row.extracted_text == expected.text, text[:40]
         assert row.n_sentences == len(expected.sentences)
         assert row.n_tokens == len(expected.tokens)
-        # offsets slice the extracted text back to the token surface
+        # shifted offsets slice the extracted text back to the surface
+        base = row.tok_begin[0] if row.tok_begin else 0
         for t, b, e in zip(row.tok_text, row.tok_begin, row.tok_end):
-            assert row.extracted_text[b:e] == t
+            assert row.extracted_text[b - base:e - base] == t
 
 
 def test_extract_keep_mode(spark, fixture_turns):
     from texoo_spark.pipeline import extract_turns
+    texts = _texts(fixture_turns)
     out = extract_turns(fixture_turns, newlines=textops.KEEP,
                         strip_html_first=False).collect()
     for row in out:
-        expected = textops.extract_document(row.text, textops.KEEP)
+        expected = textops.extract_document(
+            texts[(row.conv_id, row.turn_idx)], textops.KEEP)
         assert row.extracted_text == expected.text
 
 
@@ -141,51 +161,45 @@ def test_gazetteer_udf_spark(spark):
     assert row.n == 8  # MatchingAnnotatorTest.testCaseSensitive
 
 
-def test_lean_extraction_matches_fat(spark, fixture_turns):
-    """EXTRACT_LEAN_SCHEMA output must equal the full output minus tok_text,
-    and tok_text must stay reconstructible as extracted_text[begin:end]."""
-    from texoo_spark.pipeline import extract_turns
-    fat = extract_turns(fixture_turns, lean=False).collect()
-    lean = extract_turns(fixture_turns, lean=True).collect()
-    fat_by_key = {(r.conv_id, r.turn_idx): r for r in fat}
-    assert len(lean) == len(fat)
-    for r in lean:
-        f = fat_by_key[(r.conv_id, r.turn_idx)]
-        assert r.extracted_text == f.extracted_text
-        assert r.n_tokens == f.n_tokens
-        assert r.n_sentences == f.n_sentences
-        assert r.tok_begin == f.tok_begin
-        assert r.tok_end == f.tok_end
-        assert r.sent_begin == f.sent_begin
-        assert r.sent_end == f.sent_end
-        assert r.sent_tok_start == f.sent_tok_start
-        assert r.sent_tok_end == f.sent_tok_end
-        # reconstruction invariant: token surfaces derive from offsets
-        for txt, b, e in zip(f.tok_text, r.tok_begin, r.tok_end):
-            assert r.extracted_text[b:e] == txt
+def test_with_tok_text_matches_reference(spark, fixture_turns):
+    """Token surfaces derived in Catalyst equal the reference lane's
+    tok_texts, in KEEP and DISCARD mode, with the offsets they come from."""
+    from texoo_spark.pipeline import extract_turns, with_tok_text
+    texts = _texts(fixture_turns)
+    for mode in (textops.KEEP, textops.DISCARD):
+        rows = with_tok_text(extract_turns(
+            fixture_turns, newlines=mode, strip_html_first=False)).collect()
+        assert len(rows) == len(texts)
+        for r in rows:
+            toks, begins, ends, _, _ = textops.extract_arrays(
+                texts[(r.conv_id, r.turn_idx)], mode)
+            assert r.tok_text == toks
+            assert (r.tok_begin, r.tok_end) == (begins, ends)
 
 
-def test_arrow_lane_matches_pandas_lane(spark, fixture_turns):
-    """mapInArrow hot lane output must equal extract_turns(lean=True) on the
-    reference fixture strings, row for row, including order preservation."""
+def test_arrow_lane_matches_reference_lane(spark, fixture_turns):
+    """The mapInArrow lane equals the reference lane (html.strip_html ->
+    textops) on the fixture strings, row for row, and keeps every input
+    column except text, in input order."""
     from pyspark.sql import functions as F
     from texoo_spark.arrow_extract import extract_turns_arrow
-    from texoo_spark.pipeline import extract_turns, with_part_id
+    from texoo_spark.pipeline import with_part_id
     src = (with_part_id(fixture_turns, n_buckets=4, salt_buckets=2)
            .withColumn("ts", F.lit(None).cast("timestamp")))
-    pandas_rows = {(r.conv_id, r.turn_idx): r
-                   for r in extract_turns(src, lean=True).collect()}
-    arrow_rows = extract_turns_arrow(
-        src.sortWithinPartitions("conv_id", "turn_idx")).collect()
-    assert len(arrow_rows) == len(pandas_rows)
-    for r in arrow_rows:
-        p = pandas_rows[(r.conv_id, r.turn_idx)]
-        assert r.extracted_text == p.extracted_text
-        assert r.n_tokens == p.n_tokens and r.n_sentences == p.n_sentences
-        assert r.tok_begin == p.tok_begin and r.tok_end == p.tok_end
-        assert r.sent_begin == p.sent_begin and r.sent_end == p.sent_end
-        assert (r.sent_tok_start == p.sent_tok_start
-                and r.sent_tok_end == p.sent_tok_end)
+    texts = _texts(src)
+    out = extract_turns_arrow(src.sortWithinPartitions("conv_id", "turn_idx"))
+    assert out.columns[:6] == ["conv_id", "turn_idx", "role", "tool",
+                               "part_id", "ts"]
+    rows = out.collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        _, begins, ends, sents, ext = _reference(
+            texts[(r.conv_id, r.turn_idx)])
+        assert r.extracted_text == ext
+        assert r.n_tokens == len(begins) and r.n_sentences == len(sents)
+        assert r.tok_begin == begins and r.tok_end == ends
+        assert (list(zip(r.sent_begin, r.sent_end, r.sent_tok_start,
+                         r.sent_tok_end)) == sents)
 
 
 def test_run_extraction_arrow_lane(spark, fixture_turns, tmp_path_factory):
@@ -195,12 +209,33 @@ def test_run_extraction_arrow_lane(spark, fixture_turns, tmp_path_factory):
     inp = str(tmp_path_factory.mktemp("arrow_in")) + "/turns"
     (fixture_turns.withColumn("ts", F.lit(None).cast("timestamp"))
      .write.parquet(inp))
-    s1 = run_extraction(spark, inp, out, n_buckets=4, salt_buckets=2,
-                        use_arrow=True)
+    s1 = run_extraction(spark, inp, out, n_buckets=4, salt_buckets=2)
     assert s1["n_turns"] == fixture_turns.count()
-    s2 = run_extraction(spark, inp, out, n_buckets=4, salt_buckets=2,
-                        use_arrow=True)
+    cols = spark.read.parquet(os.path.join(out, "turns")).columns
+    assert "text" not in cols and "tok_text" not in cols
+    s2 = run_extraction(spark, inp, out, n_buckets=4, salt_buckets=2)
     assert s2["processed_parts"] == 0 and s2["skipped_parts"] >= 1
+
+
+def test_run_extraction_corrupt_manifest_raises(spark, fixture_turns,
+                                                tmp_path_factory):
+    """Only a missing manifest means a fresh run: an unreadable one must
+    raise, and nothing may be appended to turns."""
+    from pyspark.sql import functions as F
+    from texoo_spark.pipeline import run_extraction
+    out = str(tmp_path_factory.mktemp("corrupt_manifest"))
+    inp = str(tmp_path_factory.mktemp("corrupt_in")) + "/turns"
+    (fixture_turns.withColumn("ts", F.lit(None).cast("timestamp"))
+     .write.parquet(inp))
+    run_extraction(spark, inp, out, n_buckets=4, salt_buckets=2)
+    mdir = os.path.join(out, "_manifest")
+    for name in os.listdir(mdir):
+        if name.endswith(".parquet"):
+            with open(os.path.join(mdir, name), "wb") as f:
+                f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_extraction(spark, inp, out, n_buckets=4, salt_buckets=2)
+    assert spark.read.parquet(os.path.join(out, "turns")).count() == 7
 
 
 def test_salting_spreads_skewed_conversation(spark):
@@ -260,6 +295,29 @@ def test_curation_pipeline(spark, tmp_path_factory):
     assert "k0" in kept and len(kept) == 2
     fun = spark.read.parquet(out + "/_funnel").collect()[0]
     assert fun.after_near_dedup == 2
+
+
+def test_curation_bare_schema(spark, tmp_path_factory):
+    """curate.run accepts the bare transcript schema (no part_id)."""
+    from pyspark.sql import functions as F
+    from texoo_spark import curate
+    from texoo_spark.schema import TRANSCRIPT_SCHEMA
+    text = ("a long enough sentence about the weather and the sea for "
+            "the quality gate")
+    df = spark.createDataFrame(
+        [("c0", 0, "user", text, None, None),
+         ("c1", 0, "user", text, None, None),
+         ("c2", 0, "user", "short", None, None)], TRANSCRIPT_SCHEMA)
+    inp = str(tmp_path_factory.mktemp("curate_bare_in")) + "/turns"
+    out = str(tmp_path_factory.mktemp("curate_bare_out"))
+    df.write.parquet(inp)
+    funnel = curate.run(spark, inp, out)
+    assert funnel == {"input": 3, "after_quality": 2,
+                      "after_exact_dedup": 1, "after_near_dedup": 1}
+    kept = spark.read.parquet(out + "/curated")
+    assert [r.conv_id for r in kept.collect()] == ["c0"]
+    assert "part_id" not in kept.columns
+    assert kept.filter(F.col("extracted_text") == text).count() == 1
 
 
 def test_arrow_lane_edge_rows(spark):

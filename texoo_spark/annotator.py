@@ -140,6 +140,9 @@ def load_pipeline(path: str) -> "Pipeline":
 @register_annotator("extract")
 def extract_annotator(newlines: str = "DISCARD",
                       strip_html: bool = True) -> Annotator:
+    """T1 stage: the extraction lane. It stores no token surfaces; the
+    stages that read them (tagger) derive them with
+    pipeline.with_tok_text."""
     from texoo_spark.pipeline import extract_turns
     return Annotator(
         "extract",
@@ -268,8 +271,8 @@ def linker_annotator(aliases: list, top_k: int = 1) -> Annotator:
             [(str(a), str(e), float(p)) for a, e, p in aliases],
             "alias string, entity_id string, prior double")
         # the input is consumed TWICE (mention explode + join-back of the
-        # per-doc aggregate); persist so upstream stages — typically a
-        # chain of Arrow-eval extraction UDFs — run once, not once per
+        # per-doc aggregate); persist so upstream stages — typically the
+        # extraction lane and the gazetteer UDF — run once, not once per
         # consumer (tracked: release with release_annotator_caches())
         df = _persist_tracked(df)
         # conv_id carries doc_id in its ORIGINAL type — a string/long

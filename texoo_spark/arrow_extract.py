@@ -1,12 +1,12 @@
-"""mapInArrow extraction path: the bulk-pipeline hot lane.
+"""The extraction lane: the one place where extraction crosses into Python.
 
-Same semantics as pipeline.extract_turns(lean=True) — fused HTML-strip +
-sentence/token segmentation per turn — but the UDF operates directly on
-pyarrow RecordBatches: offset arrays accumulate into flat int32 buffers and
-become ListArrays via ListArray.from_arrays (one allocation per batch), and
-input columns pass through zero-copy. This skips the pandas Series/DataFrame
-wrapping and per-element object conversion of the pandas_udf lane entirely
-(~25-40% wall-time on the extraction stage at 1M turns).
+A mapInArrow stage fuses the HTML strip (when the turn looks like markup)
+with sentence/token segmentation per turn, and works directly on pyarrow
+RecordBatches: offset arrays accumulate into flat int32 buffers and become
+ListArrays via ListArray.from_arrays (one allocation per batch), and every
+input column except ``text`` passes through zero-copy. Token surfaces are
+not built; pipeline.with_tok_text derives them in Catalyst when a caller
+needs them (schema.py states the reconstruction rule).
 
 Row order within each partition is preserved (mapInArrow is a streaming
 per-partition map), so sortWithinPartitions(conv_id, turn_idx) BEFORE this
@@ -16,20 +16,10 @@ operator yields stably ordered output — the BASELINE ordering contract.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from texoo_spark import textops
-
-# passthrough input columns, in output order
-_PASS = ["conv_id", "turn_idx", "role", "tool", "ts", "part_id"]
-_NEW = ["extracted_text", "n_sentences", "n_tokens",
-        "tok_begin", "tok_end",
-        "sent_begin", "sent_end", "sent_tok_start", "sent_tok_end"]
-
-ARROW_EXTRACT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, tool string, ts timestamp, "
-    "part_id int, extracted_text string, n_sentences int, n_tokens int, "
-    "tok_begin array<int>, tok_end array<int>, sent_begin array<int>, "
-    "sent_end array<int>, sent_tok_start array<int>, sent_tok_end array<int>")
+from texoo_spark.schema import EXTRACT_SCHEMA
 
 
 def _make_mapper(newlines: str, strip_html_first: bool):
@@ -41,6 +31,7 @@ def _make_mapper(newlines: str, strip_html_first: bool):
 
         extract = textops.extract_arrays_lean
         int32 = pa.int32()
+        new_names = EXTRACT_SCHEMA.fieldNames()
 
         for batch in batches:
             names = batch.schema.names
@@ -84,25 +75,28 @@ def _make_mapper(newlines: str, strip_html_first: bool):
                 return pa.ListArray.from_arrays(
                     offsets, pa.array(np.asarray(vals, np.int32), int32))
 
-            cols = {nm: batch.column(j) for j, nm in enumerate(names)}
-            arrays = ([cols[nm] for nm in _PASS]
+            keep = [j for j, nm in enumerate(names) if nm != "text"]
+            arrays = ([batch.column(j) for j in keep]
                       + [pa.array(ext_texts, pa.string()),
                          pa.array(ns, int32), pa.array(nt, int32),
                          lst(t_offsets, tb_flat), lst(t_offsets, te_flat),
                          lst(s_offsets, sb_flat), lst(s_offsets, se_flat),
                          lst(s_offsets, sts_flat), lst(s_offsets, ste_flat)])
-            yield pa.RecordBatch.from_arrays(arrays, names=_PASS + _NEW)
+            yield pa.RecordBatch.from_arrays(
+                arrays, names=[names[j] for j in keep] + new_names)
 
     return mapper
 
 
 def extract_turns_arrow(df: DataFrame, newlines: str = textops.DISCARD,
                         strip_html_first: bool = True) -> DataFrame:
-    """extract_turns(lean=True) semantics on the mapInArrow fast lane.
+    """text -> (extracted_text, token/sentence offset arrays) per row.
 
-    Input must carry the transcript columns (conv_id, turn_idx, role, text,
-    tool, ts) plus part_id; output drops the raw text column (the cleaned
-    extracted_text replaces it — the extraction contract).
+    Any input schema with a ``text`` column works (the bare transcript
+    table, a bucketed one, a documents table); the output keeps every
+    other input column and drops the raw text (the cleaned extracted_text
+    replaces it — the extraction contract).
     """
-    return df.mapInArrow(_make_mapper(newlines, strip_html_first),
-                         ARROW_EXTRACT_SCHEMA)
+    schema = StructType([f for f in df.schema.fields if f.name != "text"]
+                        + EXTRACT_SCHEMA.fields)
+    return df.mapInArrow(_make_mapper(newlines, strip_html_first), schema)

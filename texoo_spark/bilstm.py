@@ -474,6 +474,7 @@ def tag_mentions_neural(extracted):
     span arrays as tagger.tag_mentions."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
+    from texoo_spark.pipeline import with_tok_text
     from texoo_spark.tagger import TAGGED_SCHEMA
 
     model, feat, _info = train_fixture_bilstm()
@@ -506,7 +507,7 @@ def tag_mentions_neural(extracted):
             rows["m_label"].append([lb for _, _, lb, _ in spans])
         return pd.DataFrame(rows)
 
-    return (extracted
+    return (with_tok_text(extracted)
             .withColumn("m", neural_udf(
                 F.col("tok_text"), F.col("sent_tok_end"),
                 F.col("tok_begin"), F.col("tok_end")))

@@ -8,6 +8,9 @@ Usage (cluster):
 Build the zip with: python tools/build_pyfiles.py
 Resume is automatic: completed part_ids recorded in <output>/_manifest are
 anti-joined away on restart.
+
+Output turns carry extracted_text and offset arrays, not token surfaces;
+pipeline.with_tok_text derives them (the rule is stated in schema.py).
 """
 
 from __future__ import annotations
@@ -28,9 +31,6 @@ def main(argv: list[str] | None = None) -> None:
                    default="DISCARD")
     p.add_argument("--no-resume", action="store_true",
                    help="reprocess all partitions even if manifested")
-    p.add_argument("--arrow", action="store_true",
-                   help="mapInArrow hot lane: no token surfaces stored "
-                        "(reconstruct via extracted_text[tok_begin:tok_end])")
     p.add_argument("--master", default=None,
                    help="override master (defaults to spark-submit's)")
     args = p.parse_args(argv)
@@ -46,8 +46,7 @@ def main(argv: list[str] | None = None) -> None:
     summary = run_extraction(
         spark, args.input, args.output,
         n_buckets=args.buckets, salt_buckets=args.salt_buckets,
-        newlines=args.newlines, resume=not args.no_resume,
-        use_arrow=args.arrow)
+        newlines=args.newlines, resume=not args.no_resume)
     print(json.dumps(summary))
 
 

@@ -1,140 +1,18 @@
-"""Arrow-batched pandas UDFs wrapping the segmentation core.
+"""Arrow-batched pandas UDFs over single text columns (language id, word
+joining).
 
-All UDFs are vectorized at the Arrow-batch level (no per-row Python UDFs):
-one Python invocation handles spark.sql.execution.arrow.maxRecordsPerBatch
-rows, looping in-interpreter over short strings with compiled regexes.
+Extraction itself is not here: it crosses into Python only in the
+mapInArrow lane (arrow_extract.py, called through
+pipeline.extract_turns).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from texoo_spark import textops
-from texoo_spark.schema import EXTRACT_LEAN_SCHEMA, EXTRACT_SCHEMA
-
-
-def _extract_batch(texts: pd.Series, newlines: str) -> pd.DataFrame:
-    rows = {k: [] for k in ("extracted_text", "n_sentences", "n_tokens",
-                            "tok_text", "tok_begin", "tok_end",
-                            "sent_begin", "sent_end",
-                            "sent_tok_start", "sent_tok_end")}
-    extract = textops.extract_arrays
-    for text in texts:
-        tok_texts, begins, ends, sents, extracted = extract(
-            text if text is not None else "", newlines)
-        rows["extracted_text"].append(extracted)
-        rows["n_sentences"].append(len(sents))
-        rows["n_tokens"].append(len(tok_texts))
-        rows["tok_text"].append(tok_texts)
-        rows["tok_begin"].append(begins)
-        rows["tok_end"].append(ends)
-        rows["sent_begin"].append([s[0] for s in sents])
-        rows["sent_end"].append([s[1] for s in sents])
-        rows["sent_tok_start"].append([s[2] for s in sents])
-        rows["sent_tok_end"].append([s[3] for s in sents])
-    return pd.DataFrame(rows)
-
-
-@pandas_udf(EXTRACT_SCHEMA)
-def extract_keep_udf(texts: pd.Series) -> pd.DataFrame:
-    """Segment raw turn text, keeping newline tokens (Newlines.KEEP)."""
-    return _extract_batch(texts, textops.KEEP)
-
-
-@pandas_udf(EXTRACT_SCHEMA)
-def extract_discard_udf(texts: pd.Series) -> pd.DataFrame:
-    """Segment raw turn text, discarding newline tokens (Newlines.DISCARD)."""
-    return _extract_batch(texts, textops.DISCARD)
-
-
-def extract_udf(newlines: str = textops.DISCARD):
-    return extract_keep_udf if newlines == textops.KEEP else extract_discard_udf
-
-
-def _extract_batch_lean(texts, newlines: str) -> pd.DataFrame:
-    """Lean batch builder: no tok_text column (reconstructible from
-    extracted_text + offsets), int32 numpy offset arrays for cheap Arrow
-    conversion. This is the bulk-pipeline hot path."""
-    n = len(texts)
-    extracted = [None] * n
-    n_sent = np.empty(n, dtype=np.int32)
-    n_tok = np.empty(n, dtype=np.int32)
-    cols = {k: [None] * n for k in ("tok_begin", "tok_end", "sent_begin",
-                                    "sent_end", "sent_tok_start",
-                                    "sent_tok_end")}
-    extract = textops.extract_arrays_lean
-    for i, text in enumerate(texts):
-        _, begins, ends, sents, ext = extract(
-            text if text is not None else "", newlines)
-        extracted[i] = ext
-        n_sent[i] = len(sents)
-        n_tok[i] = len(begins)
-        cols["tok_begin"][i] = np.asarray(begins, dtype=np.int32)
-        cols["tok_end"][i] = np.asarray(ends, dtype=np.int32)
-        if sents:
-            sa = np.asarray(sents, dtype=np.int32)
-            cols["sent_begin"][i] = sa[:, 0]
-            cols["sent_end"][i] = sa[:, 1]
-            cols["sent_tok_start"][i] = sa[:, 2]
-            cols["sent_tok_end"][i] = sa[:, 3]
-        else:
-            empty = np.empty(0, dtype=np.int32)
-            for k in ("sent_begin", "sent_end", "sent_tok_start",
-                      "sent_tok_end"):
-                cols[k][i] = empty
-    out = {"extracted_text": extracted, "n_sentences": n_sent,
-           "n_tokens": n_tok}
-    out.update(cols)
-    return pd.DataFrame(out, copy=False)
-
-
-def _pipeline_batch(texts: pd.Series, newlines: str) -> pd.DataFrame:
-    """HTML-strip (when the turn looks like markup) + segmentation in ONE
-    Python hop — avoids a second ArrowEvalPython round-trip per batch."""
-    from texoo_spark.html import looks_like_html, strip_html
-    cleaned = pd.Series(
-        [strip_html(t)["main_text"] if t and looks_like_html(t) else (t or "")
-         for t in texts])
-    return _extract_batch(cleaned, newlines)
-
-
-@pandas_udf(EXTRACT_SCHEMA)
-def pipeline_keep_udf(texts: pd.Series) -> pd.DataFrame:
-    return _pipeline_batch(texts, textops.KEEP)
-
-
-@pandas_udf(EXTRACT_SCHEMA)
-def pipeline_discard_udf(texts: pd.Series) -> pd.DataFrame:
-    return _pipeline_batch(texts, textops.DISCARD)
-
-
-def pipeline_udf(newlines: str = textops.DISCARD):
-    return pipeline_keep_udf if newlines == textops.KEEP else pipeline_discard_udf
-
-
-def _clean_html(texts) -> list:
-    from texoo_spark.html import looks_like_html, strip_html
-    return [strip_html(t)["main_text"] if t and looks_like_html(t)
-            else (t or "") for t in texts]
-
-
-@pandas_udf(EXTRACT_LEAN_SCHEMA)
-def pipeline_lean_keep_udf(texts: pd.Series) -> pd.DataFrame:
-    return _extract_batch_lean(_clean_html(texts), textops.KEEP)
-
-
-@pandas_udf(EXTRACT_LEAN_SCHEMA)
-def pipeline_lean_discard_udf(texts: pd.Series) -> pd.DataFrame:
-    return _extract_batch_lean(_clean_html(texts), textops.DISCARD)
-
-
-def pipeline_lean_udf(newlines: str = textops.DISCARD):
-    """HTML-strip + segmentation in one hop, lean output (no tok_text)."""
-    return (pipeline_lean_keep_udf if newlines == textops.KEEP
-            else pipeline_lean_discard_udf)
 
 
 @pandas_udf(StringType())

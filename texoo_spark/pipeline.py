@@ -8,8 +8,10 @@ Scale design (BASELINE north_rule):
 - per-partition manifests make the job resumable: completed part_ids are
   anti-joined away on restart; each manifest row carries lineage (input
   path, code version) and metrics (turn/token/sentence counts);
-- all text work happens in Arrow-batched pandas UDFs; everything else is
-  built-in Catalyst operators (filters push down to the parquet scan).
+- all text work crosses into Python once, in the mapInArrow lane
+  (arrow_extract.py); token surfaces are derived on demand in Catalyst
+  (with_tok_text); everything else is built-in Catalyst operators
+  (filters push down to the parquet scan).
 """
 
 from __future__ import annotations
@@ -17,10 +19,11 @@ from __future__ import annotations
 import datetime
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from texoo_spark import textops
-from texoo_spark.extract import extract_udf
+from texoo_spark.arrow_extract import extract_turns_arrow
 from texoo_spark.schema import MANIFEST_SCHEMA
 
 CODE_VERSION = "texoo-spark-0.1"
@@ -44,30 +47,40 @@ def with_part_id(df: DataFrame, n_buckets: int,
 
 
 def extract_turns(df: DataFrame, newlines: str = textops.DISCARD,
-                  strip_html_first: bool = True,
-                  lean: bool = False) -> DataFrame:
-    """text -> (extracted_text, token/sentence offset arrays) per turn.
+                  strip_html_first: bool = True) -> DataFrame:
+    """text -> (extracted_text, token/sentence offset arrays) per turn,
+    on the mapInArrow lane (arrow_extract.extract_turns_arrow).
 
-    When strip_html_first is set, HTML-looking turns are boilerplate-stripped
-    before segmentation inside the SAME pandas UDF (one ArrowEvalPython
-    node, one Arrow round-trip per batch); extraction offsets are relative
-    to the cleaned text, which IS the extracted-text contract.
+    When strip_html_first is set, HTML-looking turns are boilerplate-
+    stripped before segmentation in the same Python hop; offsets are
+    relative to the cleaned text, which IS the extracted-text contract.
+    Token surfaces are not produced: call with_tok_text."""
+    return extract_turns_arrow(df, newlines, strip_html_first)
 
-    lean=True drops the tok_text array from the UDF output (it is always
-    extracted_text[tok_begin:tok_end] by the reconstruction invariant),
-    halving Arrow transfer + downstream sort/write bytes — use for bulk
-    jobs whose sink does not store token surfaces."""
-    from texoo_spark.extract import pipeline_lean_udf, pipeline_udf
-    if lean and strip_html_first:
-        udf = pipeline_lean_udf(newlines)
-    elif strip_html_first:
-        udf = pipeline_udf(newlines)
-    else:
-        udf = extract_udf(newlines)
-    return (df
-            .withColumn("doc", udf(F.col("text")))
-            .select("*", "doc.*")
-            .drop("doc"))
+
+def with_tok_text(df: DataFrame) -> DataFrame:
+    """Add the token surfaces ``tok_text`` to extraction output, derived
+    JVM-side from extracted_text and the offsets by the reconstruction
+    rule in schema.py (Spark's substring counts code points, as Python
+    slicing does)."""
+    return df.withColumn("tok_text", F.expr(
+        "transform(arrays_zip(tok_begin, tok_end), x -> substring("
+        "extracted_text, x.tok_begin - tok_begin[0] + 1, "
+        "x.tok_end - x.tok_begin))"))
+
+
+def _read_manifest(spark: SparkSession, path: str, table) -> DataFrame | None:
+    """The manifest of earlier runs, or None when there is none yet. Any
+    other read failure raises: treating a corrupt manifest as empty would
+    append every part a second time."""
+    if table is not None:
+        return table.read(spark) if table.current_version() else None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
@@ -75,7 +88,6 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
                    newlines: str = textops.DISCARD,
                    resume: bool = True,
                    write_spans: bool = True,
-                   use_arrow: bool = False,
                    table_log: bool = False) -> dict:
     """Batch extraction with checkpointed partition manifests.
 
@@ -83,6 +95,9 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
     arrays), <out>/spans (long-format typed spans per turn), and
     <out>/_manifest (per-partition lineage + metrics; resume anti-joins it).
     Returns a summary dict {processed_parts, skipped_parts, n_turns}.
+    Turn rows keep every input column except text; token surfaces are not
+    stored (with_tok_text derives them; schema.py states the rule).
+    A missing manifest means a fresh run; an unreadable one raises.
 
     ``table_log=True`` commits every output through
     texoo_spark.tablelog.TableLog instead of plain parquet-dir appends:
@@ -91,8 +106,7 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
     record lineage per run, and resume reads the manifest from its
     committed snapshot. On a cluster with an Iceberg catalog this is the
     seam where df.writeTo(table).append() slots in (tablelog.py module
-    docstring); the default plain-parquet mode is the bench hot lane and
-    is byte-identical to before.
+    docstring); the default plain-parquet mode is the bench hot lane.
     """
     manifest_path = os.path.join(output_dir, "_manifest")
     data_path = os.path.join(output_dir, "turns")
@@ -107,16 +121,14 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
     df = with_part_id(df, n_buckets, salt_buckets)
 
     done: set[int] = set()
-    if resume:
-        try:
-            prev_manifest = (manifest_t.read(spark) if table_log
-                             else spark.read.parquet(manifest_path))
-            done = {r.part_id for r in
-                    prev_manifest
-                    .filter(F.col("status") == "done")
-                    .select("part_id").distinct().collect()}
-        except Exception:
-            done = set()
+    prev_manifest = (_read_manifest(spark, manifest_path,
+                                    manifest_t if table_log else None)
+                     if resume else None)
+    if prev_manifest is not None:
+        done = {r.part_id for r in
+                prev_manifest
+                .filter(F.col("status") == "done")
+                .select("part_id").distinct().collect()}
     if done:
         df = df.filter(~F.col("part_id").isin(list(done)))
 
@@ -125,17 +137,11 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
     if not pending_ids:
         return {"processed_parts": 0, "skipped_parts": len(done), "n_turns": 0}
 
+    # order established on slim rows; the mapInArrow lane preserves it
     clustered = df.repartition(max(len(pending_ids), 1), "part_id")
-    if use_arrow:
-        # hot lane: order established on slim rows, mapInArrow preserves it;
-        # token surfaces not stored (extracted_text[tok_begin:tok_end])
-        from texoo_spark.arrow_extract import extract_turns_arrow
-        extracted = extract_turns_arrow(
-            clustered.sortWithinPartitions("conv_id", "turn_idx"),
-            newlines=newlines)
-    else:
-        extracted = (extract_turns(clustered, newlines=newlines)
-                     .sortWithinPartitions("conv_id", "turn_idx"))
+    extracted = extract_turns(
+        clustered.sortWithinPartitions("conv_id", "turn_idx"),
+        newlines=newlines)
 
     # clustered plain write: rows arrive grouped by part_id (repartition
     # above), so parquet row-group stats prune part_id predicates on read
@@ -164,21 +170,24 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
                   F.sum("n_tokens").alias("n_tokens"),
                   F.sum("n_sentences").alias("n_sentences")))
     now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    # the summary's turn count is observed on the manifest write itself,
+    # not re-aggregated by a second job
+    observed = Observation("manifest")
     manifest = (stats
                 .withColumn("status", F.lit("done"))
                 .withColumn("input_path", F.lit(input_path))
                 .withColumn("code_version", F.lit(CODE_VERSION))
                 .withColumn("written_at", F.lit(now))
-                .select([f.name for f in MANIFEST_SCHEMA.fields]))
+                .select([f.name for f in MANIFEST_SCHEMA.fields])
+                .observe(observed, F.sum("n_turns").alias("n_turns")))
     if table_log:
         manifest_t.append(manifest)
     else:
         manifest.write.mode("append").parquet(manifest_path)
 
-    n_turns = sum(r.n_turns for r in stats.select("part_id", "n_turns").collect())
     return {"processed_parts": len(pending_ids),
             "skipped_parts": len(done),
-            "n_turns": int(n_turns)}
+            "n_turns": int(observed.get["n_turns"] or 0)}
 
 
 def spans_long(extracted: DataFrame) -> DataFrame:

@@ -24,26 +24,22 @@ TRANSCRIPT_SCHEMA = StructType([
     StructField("ts", TimestampType()),
 ])
 
-# Extraction UDF result: tokens/sentences as parallel arrays
-# (SURVEY.md §1.2-1.3; array-of-struct equivalent, chosen for Arrow speed).
+# Extraction columns the mapInArrow lane appends to every input column
+# except text: tokens/sentences as parallel offset arrays (SURVEY.md
+# §1.2-1.3; array-of-struct equivalent, chosen for Arrow speed).
+#
+# Offsets are raw-text coordinates (of the HTML-stripped text when the
+# turn was stripped), as in the reference; extracted_text starts at the
+# first token, tok_begin[0]. Token surfaces are not stored. The
+# reconstruction rule, for every token i:
+#
+#     tok_text[i] == extracted_text[tok_begin[i] - tok_begin[0]:
+#                                   tok_end[i] - tok_begin[0]]
+#
+# (WordHelpers.java:113-137). Without the tok_begin[0] shift the slice is
+# wrong for every turn with leading whitespace. pipeline.with_tok_text
+# derives the surfaces from this rule as a Catalyst expression.
 EXTRACT_SCHEMA = StructType([
-    StructField("extracted_text", StringType()),
-    StructField("n_sentences", IntegerType()),
-    StructField("n_tokens", IntegerType()),
-    StructField("tok_text", ArrayType(StringType())),
-    StructField("tok_begin", ArrayType(IntegerType())),
-    StructField("tok_end", ArrayType(IntegerType())),
-    StructField("sent_begin", ArrayType(IntegerType())),
-    StructField("sent_end", ArrayType(IntegerType())),
-    StructField("sent_tok_start", ArrayType(IntegerType())),
-    StructField("sent_tok_end", ArrayType(IntegerType())),
-])
-
-# Lean extraction result for the bulk pipeline: token texts are NOT shipped
-# (tok_text[i] == extracted_text[tok_begin[i]:tok_end[i]] by the
-# reconstruction invariant, WordHelpers.java:113-137), which cuts the Arrow
-# transfer + sort + parquet write volume roughly in half at ~55 tokens/turn.
-EXTRACT_LEAN_SCHEMA = StructType([
     StructField("extracted_text", StringType()),
     StructField("n_sentences", IntegerType()),
     StructField("n_tokens", IntegerType()),

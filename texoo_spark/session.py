@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
 Designed for multi-executor clusters; tested on local[N]. All heavy Python
-work goes through Arrow-batched pandas UDFs, so Arrow settings matter.
+work goes through Arrow batches (the mapInArrow extraction lane and the
+pandas UDFs), so Arrow settings matter.
 """
 
 from __future__ import annotations

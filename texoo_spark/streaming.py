@@ -1,7 +1,7 @@
 """Structured Streaming variants of the extraction pipeline.
 
 The BASELINE job is batch-with-resume (partition manifests), but the same
-extraction UDFs compose with readStream for incremental ingest: new
+extraction lane composes with readStream for incremental ingest: new
 transcript files land, each micro-batch extracts and appends. Watermarked
 tumbling windows cover late-arriving turns for the metrics stream.
 """

@@ -25,6 +25,7 @@ from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
                                StringType, StructField, StructType)
 
 from texoo_spark.encoders import surface_features, SURFACE_SIZE
+from texoo_spark.pipeline import with_tok_text
 from texoo_spark.spans import decode_bio2
 
 TAGS = ["O", "B", "I"]
@@ -295,10 +296,11 @@ def make_tagger_udf(tagger: LinearTagger):
 
 def tag_mentions(extracted: DataFrame,
                  tagger: LinearTagger | None = None) -> DataFrame:
-    """Extraction output -> + mention span arrays (PRED source)."""
+    """Extraction output -> + token surfaces and mention span arrays
+    (PRED source)."""
     tagger = tagger or LinearTagger.capitalized_mention_baseline()
     udf = make_tagger_udf(tagger)
-    return (extracted
+    return (with_tok_text(extracted)
             .withColumn("m", udf(F.col("tok_text"), F.col("sent_tok_end"),
                                  F.col("tok_begin"), F.col("tok_end")))
             .select("*", "m.*").drop("m"))

@@ -14,8 +14,8 @@ SF = "/root/testdata/sf0.001"
 
 COMMENTARY = {
     "extraction_pipeline": (
-        "One Python stage (FlatMapInArrow: fused HTML-strip + segmentation "
-        "on the mapInArrow hot lane, lean schema), no shuffle: the scan is "
+        "One Python stage (MapInArrow: fused HTML-strip + segmentation "
+        "on the extraction lane, no token surfaces), no shuffle: the scan is "
         "pre-clustered by part_id at ingest, the stable (conv_id, turn_idx) "
         "sort happens on slim input rows before the order-preserving map. "
         "At 10^12 turns this plan moves each row JVM->Python exactly once "
@@ -109,11 +109,11 @@ def main() -> None:
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from texoo_spark.arrow_extract import extract_turns_arrow
+    from texoo_spark.pipeline import extract_turns
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
     turns = with_part_id(transcripts_from_documents(docs),
                          n_buckets=16, salt_buckets=4)
-    pipeline_df = extract_turns_arrow(
+    pipeline_df = extract_turns(
         turns.sortWithinPartitions("conv_id", "turn_idx"))
 
     targets = {

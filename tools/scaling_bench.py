@@ -173,8 +173,8 @@ Job (identical at both sizes): read transcript parquet
 generated once on disk, clustered into {bench.BUCKETS} pmod(hash(conv_id))
 buckets with turn-block salting at ingest) -> stable
 sortWithinPartitions(conv_id, turn_idx) on the slim input rows -> fused
-HTML-strip + sentence/token segmentation mapInArrow stage (lean schema, no
-tok_text) -> zstd parquet write. One fresh JVM per timed run, warm-up
+HTML-strip + sentence/token segmentation mapInArrow stage (no token
+surfaces) -> zstd parquet write. One fresh JVM per timed run, warm-up
 excluded, sizes INTERLEAVED (N, 4N, N, 4N, ...) within a session so
 shared-box load hits both sizes equally; sessions repeated across separate
 time windows because the box's co-tenant load swings individual runs by up

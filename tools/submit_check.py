@@ -33,8 +33,7 @@ spark.range(0, 2000).selectExpr(
     "timestamp_seconds(1700000000 + id) AS ts",
 ).write.parquet(inp)
 r = run_extraction(spark, inp, os.path.join(out, "o"),
-                   n_buckets=8, salt_buckets=2, use_arrow=True,
-                   table_log=True)
+                   n_buckets=8, salt_buckets=2, table_log=True)
 assert r["n_turns"] == 2000, r
 
 # real OpenNLP GIS model lane: resources materialized from the zip
