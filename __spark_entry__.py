@@ -185,6 +185,7 @@ def q_gazetteer_matches(spark, sf_dir):
     from texoo_spark.annotator import (Pipeline, extract_annotator,
                                        gazetteer_annotator,
                                        linker_annotator, load_pipeline,
+                                       release_annotator_caches,
                                        save_pipeline)
     from texoo_spark.udfs import make_gazetteer_count_udf
     gaz = make_gazetteer_count_udf(GAZETTEER_TERMS, "CASE_SENSITIVE")
@@ -212,8 +213,11 @@ def q_gazetteer_matches(spark, sf_dir):
                       F.col("n_linked").cast("long")
                       .alias("n_linked_bundle"),
                       F.col("first_entity").alias("first_entity_bundle")))
-    # bundle side is <= 100 rows: broadcast so the fused lane (the full
-    # scan) never shuffles
+    # bundle side is <= 100 rows: materialize it, so the linker's cache
+    # is released before the query returns, and broadcast it so the fused
+    # lane (the full scan) never shuffles
+    bundle = spark.createDataFrame(bundle.collect(), bundle.schema)
+    release_annotator_caches()
     return fused.join(F.broadcast(bundle), "doc_id", "left")
 
 

@@ -77,6 +77,16 @@ def test_gazetteer_matches_wholestage_codegen(spark):
     assert "*(" in plan  # '*(n)' marks whole-stage-codegen spans
 
 
+def test_gazetteer_matches_releases_linker_cache(spark):
+    """The query's linker stage persists its input; the query releases
+    that cache itself once the bundle rows are materialized."""
+    import __spark_entry__ as e
+    from texoo_spark import annotator
+    df = e.q_gazetteer_matches(spark, SF)
+    assert annotator._PERSISTED == []
+    assert df.count() > 0  # the released cache is not needed downstream
+
+
 def test_link_mentions_is_jvm_only(spark):
     """A13 linking must stay whole-stage-codegen'd: key normalization is
     a Catalyst expression, so no Python eval node may appear anywhere in

@@ -19,11 +19,13 @@ def spark():
 def test_normalize_alias_jvm_parity(spark):
     """The JVM normalization expression must agree with the Python twin
     on the shapes alias keys actually take: case, runs of mixed unicode
-    whitespace (incl. NBSP), leading/trailing space, diacritics."""
+    whitespace (incl. NBSP), leading/trailing space, diacritics, and the
+    separators U+001C-U+001F that str.split() treats as whitespace."""
     from texoo_spark.linking import normalize_alias, normalize_alias_col
     cases = ["Paris", "  NEW   york ", "São Paulo", "a\tb\nc",
              "", "ALL CAPS  PHRASE", "tab\t\tsqueeze", "ümlaut Straße",
-             "no\u00a0break\u00a0space"]
+             "no\u00a0break\u00a0space", "a\x1cb", "a\x1db\x1ec\x1f",
+             "\x1f edge \x1c"]
     df = spark.createDataFrame([(c,) for c in cases], "s string")
     got = [r.n for r in
            df.select(normalize_alias_col(F.col("s")).alias("n")).collect()]

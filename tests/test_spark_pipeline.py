@@ -161,6 +161,95 @@ def test_gazetteer_udf_spark(spark):
     assert row.n == 8  # MatchingAnnotatorTest.testCaseSensitive
 
 
+PADS = ["", "  ", "\t", "\n", " \t\n "]
+
+
+def test_gazetteer_and_linker_shift_leading_whitespace(spark):
+    """Matches and linked surfaces of a turn with leading spaces, tab or
+    newline equal those of the unpadded turn, shifted by the padding:
+    both gazetteer UDFs and the linker slice extracted_text with the
+    tok_begin[0] shift (schema.py)."""
+    from pyspark.sql import functions as F
+    from texoo_spark.annotator import (Pipeline, extract_annotator,
+                                       gazetteer_annotator,
+                                       linker_annotator,
+                                       release_annotator_caches)
+    from texoo_spark.pipeline import extract_turns
+    from texoo_spark.udfs import make_gazetteer_count_udf, make_gazetteer_udf
+    text = "Aspirin is a drug."
+    terms = ["Aspirin", "drug"]
+    df = spark.createDataFrame(
+        [(i, "c", i, "user", pad + text, None) for i, pad in enumerate(PADS)],
+        "doc_id long, conv_id string, turn_idx int, role string, "
+        "text string, tool string")
+    gaz = make_gazetteer_udf(terms, "CASE_SENSITIVE")
+    count = make_gazetteer_count_udf(terms, "CASE_SENSITIVE")
+    rows = (extract_turns(df, strip_html_first=False)
+            .withColumn("m", gaz(F.col("extracted_text"),
+                                 F.col("tok_begin"), F.col("tok_end")))
+            .select("doc_id", "m.m_begin", "m.m_end").collect())
+    counts = {r.doc_id: r.n for r in
+              df.select("doc_id", count(F.col("text")).alias("n")).collect()}
+    for r in rows:
+        shift = len(PADS[r.doc_id])
+        assert r.m_begin == [0 + shift, 13 + shift]
+        assert r.m_end == [7 + shift, 17 + shift]
+        assert counts[r.doc_id] == 2
+    pipe = Pipeline()
+    pipe.stages.append(extract_annotator("DISCARD", False))
+    pipe.stages.append(gazetteer_annotator(terms))
+    pipe.stages.append(linker_annotator([["aspirin", "E1", 0.9],
+                                         ["drug", "E2", 0.8]]))
+    linked = pipe.run(df.select("doc_id", "text")).collect()
+    release_annotator_caches()
+    assert len(linked) == len(PADS)
+    for r in linked:
+        assert (r.n_linked, r.first_entity) == (2, "E1"), repr(
+            PADS[r.doc_id])
+
+
+def test_run_extraction_sizes_tasks_by_slots(spark, tmp_path_factory):
+    """Buckets are the resume unit, not the task unit: 64 buckets over
+    ~300 turns write at most defaultParallelism files, each ordered by
+    (conv_id, turn_idx), each bucket whole in one file; resume still
+    works per bucket."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from texoo_spark.pipeline import run_extraction
+    base = str(tmp_path_factory.mktemp("task_sizing"))
+    inp, out = os.path.join(base, "input"), os.path.join(base, "out")
+    rows = [(f"conv-{c:03d}", t, "user",
+             f"Turn {t} of conversation {c}. It has two sentences.", None)
+            for c in range(60) for t in range(5)]
+    (spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string")
+     .withColumn("ts", F.lit(None).cast("timestamp"))
+     .write.parquet(inp))
+    r1 = run_extraction(spark, inp, out, n_buckets=64)
+    assert r1["n_turns"] == len(rows)
+    assert r1["processed_parts"] > spark.sparkContext.defaultParallelism
+    tdir = os.path.join(out, "turns")
+    files = [os.path.join(tdir, f) for f in os.listdir(tdir)
+             if f.startswith("part-") and f.endswith(".parquet")]
+    assert 1 <= len(files) <= spark.sparkContext.defaultParallelism
+    owner = {}
+    for f in files:
+        t = pq.read_table(f, columns=["conv_id", "turn_idx", "part_id"])
+        keys = list(zip(t.column("conv_id").to_pylist(),
+                        t.column("turn_idx").to_pylist()))
+        assert keys == sorted(keys), f
+        for pid in set(t.column("part_id").to_pylist()):
+            assert owner.setdefault(pid, f) == f, pid
+    assert len(owner) == r1["processed_parts"]
+    r2 = run_extraction(spark, inp, out, n_buckets=64)
+    assert r2["processed_parts"] == 0
+    assert r2["skipped_parts"] == r1["processed_parts"]
+    mani = spark.read.parquet(os.path.join(out, "_manifest"))
+    assert mani.agg(F.sum("n_turns")).collect()[0][0] == len(rows)
+    shutil.rmtree(base, ignore_errors=True)
+
+
 def test_with_tok_text_matches_reference(spark, fixture_turns):
     """Token surfaces derived in Catalyst equal the reference lane's
     tok_texts, in KEEP and DISCARD mode, with the offsets they come from."""

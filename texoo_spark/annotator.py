@@ -282,12 +282,16 @@ def linker_annotator(aliases: list, top_k: int = 1) -> Annotator:
             F.col("doc_id").alias("conv_id"),
             F.lit(0).alias("turn_idx"),
             "extracted_text",
+            "tok_begin",
             F.explode(F.arrays_zip(F.col("m_begin").alias("begin"),
                                    F.col("m_end").alias("end"))).alias("m"))
             .select("conv_id", "turn_idx",
                     F.col("m.begin").alias("begin"),
                     F.col("m.end").alias("end"),
-                    F.expr("substring(extracted_text, m.begin + 1,"
+                    # mention offsets are raw-text coordinates and
+                    # extracted_text starts at tok_begin[0] (schema.py)
+                    F.expr("substring(extracted_text,"
+                           " m.begin - tok_begin[0] + 1,"
                            " m.end - m.begin)").alias("surface")))
         linked = (link_mentions(mentions, adf, top_k=top_k)
                   .filter(F.col("cand_rank") == 1)

@@ -7,7 +7,8 @@ Usage (cluster):
 
 Build the zip with: python tools/build_pyfiles.py
 Resume is automatic: completed part_ids recorded in <output>/_manifest are
-anti-joined away on restart.
+filtered away on restart. --buckets sets the resume and lineage unit; the
+number of extraction tasks follows the core slots and the pending turns.
 
 Output turns carry extracted_text and offset arrays, not token surfaces;
 pipeline.with_tok_text derives them (the rule is stated in schema.py).
@@ -24,7 +25,11 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--input", required=True, help="transcript table path")
     p.add_argument("--output", required=True, help="output directory")
     p.add_argument("--buckets", type=int, default=256,
-                   help="hash(conv_id) bucket count (scale with data size)")
+                   help="hash(conv_id) bucket count: the unit of resume "
+                        "and lineage (one manifest row per bucket). Tasks "
+                        "are sized by core slots and pending turns, not by "
+                        "this count, so a cluster-sized value costs a "
+                        "small job no extra Python start-ups")
     p.add_argument("--salt-buckets", type=int, default=16,
                    help="turn-block salt spread for skewed conversations")
     p.add_argument("--newlines", choices=["KEEP", "DISCARD"],

@@ -1,13 +1,19 @@
 """End-to-end extraction pipeline over transcript tables.
 
 Scale design (BASELINE north_rule):
-- partition by hash(conv_id) into a fixed bucket count (part_id); skewed
+- bucket by hash(conv_id) into a fixed bucket count (part_id); skewed
   long conversations are salted by turn block so one conversation cannot
-  pin a partition (extraction is per-turn, so salting is always safe);
+  pin a bucket (extraction is per-turn, so salting is always safe);
+- buckets are the unit of resume and lineage: per-bucket manifests make
+  the job resumable (completed part_ids are filtered away on restart) and
+  each manifest row carries lineage (input path, code version) and
+  metrics (turn/token/sentence counts);
+- buckets are not the unit of work: the pending buckets are range-
+  partitioned into as many tasks as the cluster has slots, or more when
+  the pending turns exceed TURNS_PER_TASK per slot, never more than the
+  bucket count. Every Python task pays a fixed worker set-up (~0.25
+  core-s), so one task per bucket made a small job pay it per bucket;
 - stable turn ordering via sortWithinPartitions(conv_id, turn_idx);
-- per-partition manifests make the job resumable: completed part_ids are
-  anti-joined away on restart; each manifest row carries lineage (input
-  path, code version) and metrics (turn/token/sentence counts);
 - all text work crosses into Python once, in the mapInArrow lane
   (arrow_extract.py); token surfaces are derived on demand in Catalyst
   (with_tok_text); everything else is built-in Catalyst operators
@@ -17,6 +23,7 @@ Scale design (BASELINE north_rule):
 from __future__ import annotations
 
 import datetime
+import math
 import os
 
 from pyspark.errors import AnalysisException
@@ -27,6 +34,13 @@ from texoo_spark.arrow_extract import extract_turns_arrow
 from texoo_spark.schema import MANIFEST_SCHEMA
 
 CODE_VERSION = "texoo-spark-0.1"
+
+# Turns one extraction task should carry. Every Python task pays ~0.25
+# core-seconds of PySpark worker set-up before its first row (almost all
+# of it importlib.invalidate_caches() re-reading pyspark.zip's directory
+# once per cached zipimporter); against ~230 core-us of extraction per
+# turn, 100k turns keep that fixed cost near 1% of the task.
+TURNS_PER_TASK = 100_000
 
 
 def with_part_id(df: DataFrame, n_buckets: int,
@@ -93,7 +107,9 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
 
     Outputs (BASELINE north_rule): <out>/turns (extracted text + offset
     arrays), <out>/spans (long-format typed spans per turn), and
-    <out>/_manifest (per-partition lineage + metrics; resume anti-joins it).
+    <out>/_manifest (per-bucket lineage + metrics; resume filters the
+    manifested buckets away). Buckets do not set the task count: see
+    TURNS_PER_TASK.
     Returns a summary dict {processed_parts, skipped_parts, n_turns}.
     Turn rows keep every input column except text; token surfaces are not
     stored (with_tok_text derives them; schema.py states the rule).
@@ -132,20 +148,29 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
     if done:
         df = df.filter(~F.col("part_id").isin(list(done)))
 
-    pending = df.select("part_id").distinct()
-    pending_ids = sorted(r.part_id for r in pending.collect())
+    pending = {r.part_id: r["count"]
+               for r in df.groupBy("part_id").count().collect()}
+    pending_ids = sorted(pending)
     if not pending_ids:
         return {"processed_parts": 0, "skipped_parts": len(done), "n_turns": 0}
 
+    # buckets are the unit of resume and lineage, not of work: every task
+    # pays a Python worker start-up (TURNS_PER_TASK), so tasks follow the
+    # slots and the pending turns; more tasks than buckets would be empty,
+    # because range partitioning never splits a bucket
+    n_tasks = min(len(pending_ids),
+                  max(spark.sparkContext.defaultParallelism,
+                      math.ceil(sum(pending.values()) / TURNS_PER_TASK)))
     # order established on slim rows; the mapInArrow lane preserves it
-    clustered = df.repartition(max(len(pending_ids), 1), "part_id")
+    clustered = df.repartitionByRange(n_tasks, "part_id")
     extracted = extract_turns(
         clustered.sortWithinPartitions("conv_id", "turn_idx"),
         newlines=newlines)
 
-    # clustered plain write: rows arrive grouped by part_id (repartition
-    # above), so parquet row-group stats prune part_id predicates on read
-    # without the dynamic-partition writer's sort/fanout overhead
+    # clustered plain write: range partitioning keeps every bucket whole
+    # in one file and gives each file a contiguous part_id range, so
+    # parquet row-group stats prune part_id predicates on read without
+    # the dynamic-partition writer's sort/fanout overhead
     if table_log:
         turns_t.append(extracted)
         read_turns = turns_t.read(spark)

@@ -1,8 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
 Designed for multi-executor clusters; tested on local[N]. All heavy Python
-work goes through Arrow batches (the mapInArrow extraction lane and the
-pandas UDFs), so Arrow settings matter.
+work goes through Arrow batches (extraction's mapInArrow lane, and the
+pandas UDFs of the tagging, dedup, linking and retrieval operators), so
+Arrow settings matter. Every Python task also pays a fixed worker set-up of
+~0.25 core-s, so pipeline.run_extraction sizes its tasks by the slots this
+session has (defaultParallelism) and the pending turns.
 """
 
 from __future__ import annotations

@@ -51,6 +51,17 @@ def pdf_layout_text_udf(boxes: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="object")
 
 
+def _match_extracted(matcher, ext: str, begins: list[int],
+                     ends: list[int]) -> list[tuple[int, int, str]]:
+    """matcher.match over extraction output. extracted_text starts at
+    tok_begin[0] (schema.py), so the match runs on offsets shifted into
+    extracted_text and its spans are shifted back to raw-text offsets,
+    the coordinates of tok_begin/tok_end."""
+    base = begins[0] if begins else 0
+    return [(b + base, e + base, label) for b, e, label in matcher.match(
+        ext, [b - base for b in begins], [e - base for e in ends])]
+
+
 def make_gazetteer_count_udf(terms: list[str],
                              case_strategy: str = "LOWERCASE"):
     """Fused extract+match: segments the raw text AND counts boundary-
@@ -66,7 +77,7 @@ def make_gazetteer_count_udf(terms: list[str],
         for text in texts:
             _, begins, ends, _sents, ext = extract_arrays_lean(
                 text or "", DISCARD)
-            out.append(len(matcher.match(ext, begins, ends)))
+            out.append(len(_match_extracted(matcher, ext, begins, ends)))
         return pd.Series(out)
 
     return gazetteer_count_udf
@@ -87,8 +98,8 @@ def make_gazetteer_udf(terms: list[str], case_strategy: str = "LOWERCASE"):
                       tok_ends: pd.Series) -> pd.DataFrame:
         rows = {"m_begin": [], "m_end": [], "m_label": []}
         for text, tbs, tes in zip(texts, tok_begins, tok_ends):
-            matches = matcher.match(
-                text or "",
+            matches = _match_extracted(
+                matcher, text or "",
                 list(tbs) if tbs is not None else [],
                 list(tes) if tes is not None else [])
             rows["m_begin"].append([m[0] for m in matches])
